@@ -65,7 +65,9 @@ def prepare_pings(
     semantically identical there; a vehicle genuinely crossing lines
     within one input would get per-(line,vehicle) thresholds here versus
     mixed-line thresholds in the reference — arguably a bug fix, and
-    pinned by the sample-data goldens in tests/test_pipeline_e2e.py.
+    pinned by tests/test_pattern_extraction.py::
+    test_multiline_vehicle_gets_per_line_semantics (the single-line
+    GPS fixtures cannot catch it).
     """
     # r14 (guide §2): pin the composite's ONE exchange explicitly. Every
     # window/groupBy in parts 1+2 keys on (linenumber, id); with a

@@ -1,5 +1,6 @@
-"""Stage-1 pipeline tests on the reference's sample trajectories
-(line ids remapped — see tests/gps_fixtures.py)."""
+"""Stage-1 pipeline tests on GPS pings: the reference's sample
+trajectories where that file exists, otherwise the seeded FIXTURES.md §A1
+fleet (line ids remapped in both cases — see tests/gps_fixtures.py)."""
 
 from __future__ import annotations
 
@@ -14,9 +15,9 @@ from tests.gps_fixtures import gps_fixture, synthesize_bus_line
 
 @pytest.fixture(scope="module")
 def prepared(spark, tmp_path_factory):
-    tmpdir = tmp_path_factory.mktemp("busline")
-    gps = gps_fixture(spark)
-    bus_line = read_bus_line(spark, synthesize_bus_line(spark, str(tmpdir)))
+    tmpdir = str(tmp_path_factory.mktemp("busline"))
+    gps = gps_fixture(spark, tmpdir)
+    bus_line = read_bus_line(spark, synthesize_bus_line(spark, tmpdir))
     df = prepare_pings(gps, bus_line).cache()
     df.count()
     return df

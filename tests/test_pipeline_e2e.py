@@ -1,10 +1,11 @@
 """Whole-chain test: the three reference stages composed as ONE
-dataflow on the reference's own sample data (`Sample Data/gps.csv`,
-4,713 pings / 20 vehicles) — the switch-over story: a reference user
-runs pattern extraction → trajectory clustering → blind-zone detection;
-here that is three function calls on one lazy plan with no intermediate
-CSV hops (the reference round-trips HDFS between every stage and even
-switches namenodes, SURVEY.md §1.2).
+dataflow on GPS pings — the reference's own sample data (`Sample
+Data/gps.csv`, 4,713 pings / 20 vehicles) where that file exists,
+otherwise the seeded FIXTURES.md §A1 fleet (tests/gps_fixtures.py) — the
+switch-over story: a reference user runs pattern extraction → trajectory
+clustering → blind-zone detection; here that is three function calls on
+one lazy plan with no intermediate CSV hops (the reference round-trips
+HDFS between every stage and even switches namenodes, SURVEY.md §1.2).
 
 Also re-runs the chain under a different partitioning to pin
 end-to-end determinism (the reference's own methodology — standalone vs
@@ -29,13 +30,13 @@ from tests.gps_fixtures import N_LINES, gps_fixture, synthesize_bus_line
 @pytest.fixture(scope="module")
 def sample_inputs(spark, tmp_path_factory):
     tmpdir = str(tmp_path_factory.mktemp("busline"))
-    gps = gps_fixture(spark)
+    gps = gps_fixture(spark, tmpdir)
     bus_line = read_bus_line(spark, synthesize_bus_line(spark, tmpdir))
     # eps is huge and min_samples=1 on purpose: the L0…L4 remap groups
-    # unrelated real routes onto one "line", so TRACLUS distances are far
-    # beyond production eps values (0.1–5 km); the chain test exercises
-    # the stage plumbing, and per-stage tests pin clustering quality on
-    # geometrically meaningful fixtures.
+    # the sample's unrelated real routes onto one "line", so TRACLUS
+    # distances are far beyond production eps values (0.1–5 km); the
+    # chain test exercises the stage plumbing, and per-stage tests pin
+    # clustering quality on geometrically meaningful fixtures.
     params = spark.createDataFrame(
         [(f"L{i}", 100000.0, 1) for i in range(N_LINES)],
         "linenumber string, eps float, min_samples int",
@@ -64,7 +65,7 @@ def test_three_stage_chain_on_reference_sample(spark, sample_inputs):
     # signal is the cascade's closed set
     sig = {r.signal for r in out.select("signal").distinct().collect()}
     assert sig <= {None, 0.5, 0.75, 1.0}
-    # the cascade fired somewhere (sample has real speed structure)
+    # the cascade fired somewhere (both the sample and the fleet vary speed)
     assert 0.5 in {s for s in sig if s is not None} or len(sig) > 1
 
     # no noise rows survive, speeds are finite and non-negative
